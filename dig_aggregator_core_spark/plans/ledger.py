@@ -2,13 +2,18 @@
 
 Reproduces the reference's MySQL tables and their upsert semantics
 (reference runs.sql:1-12, Runs.scala:77-116; runstatus.sql:1-12,
-RunStatus.scala:56-128) on plain Parquet:
+RunStatus.scala:56-128) on plain Parquet. Like the reference, which keeps
+this bookkeeping in a database next to the driver, the ledger never runs on
+the cluster: every read, merge and write is pyarrow on the driver, so a
+commit costs milliseconds, not a Spark job.
 
-- upsert on the unique key = old.antiJoin(new, key).union(new), written as a
-  NEW versioned directory (`v=N+1`) — no read-modify-overwrite of the
-  directory being scanned, and the previous version remains readable until
-  the new one is committed (poor-man's snapshot isolation; Delta MERGE INTO
-  is the drop-in upgrade where the dependency is allowed);
+- upsert on the unique key = the old rows whose key is absent from the new
+  ones (an Arrow left-anti join) plus the new rows, written as a NEW
+  versioned directory (`v=N+1`) holding one Parquet file — no
+  read-modify-overwrite of the directory being scanned, and the previous
+  version remains readable until the new one is committed (poor-man's
+  snapshot isolation; Delta MERGE INTO is the drop-in upgrade where the
+  dependency is allowed);
 - CONCURRENT writers are safe: every read-merge-write cycle runs under an
   exclusive flock on `<table>/.lock`, so two simultaneous upserts serialize
   and neither loses the other's rows — the semantics the reference gets for
@@ -20,6 +25,11 @@ RunStatus.scala:56-128) on plain Parquet:
   transactional table format;
 - `RunStatus.insert` on an existing key RESETS started/ended to NULL
   (RunStatus.scala:79-83 — pinned by the ported RunsStatusTest).
+
+On disk, timestamps are `timestamp[us, tz=UTC]`, which Spark reads as
+TimestampType, so `spark.read.schema(RUNS_SCHEMA).parquet(...)` reads any
+version. Versions written by Spark store INT96, which pyarrow reads as
+naive nanoseconds; those are read as UTC, like every naive datetime here.
 
 The ledger is metadata (one row per processed input-output), orders of
 magnitude smaller than the data, so these merges stay cheap at any scale.
@@ -38,8 +48,10 @@ try:  # POSIX only; the sandbox and every target deployment are Linux
 except ImportError:  # pragma: no cover - non-POSIX fallback, best effort
     fcntl = None  # type: ignore[assignment]
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 from .inputs import Input
@@ -68,20 +80,54 @@ RUNSTATUS_SCHEMA = T.StructType(
     ]
 )
 
+_ARROW_TYPES = {"string": pa.string(), "timestamp": pa.timestamp("us", tz="UTC")}
+
 
 def utc_now() -> datetime:
     """UTC wall clock (reference pins UTC everywhere: Implicits.scala:16)."""
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
+def _arrow_schema(schema: T.StructType) -> pa.Schema:
+    return pa.schema(
+        pa.field(f.name, _ARROW_TYPES[f.dataType.typeName()], f.nullable)
+        for f in schema.fields
+    )
+
+
+def _match(table: pa.Table, where: dict) -> pa.ChunkedArray:
+    """Row mask: every column equals its value (or is in it, for a list)."""
+    mask = None
+    for col, value in where.items():
+        hit = (
+            pc.is_in(table[col], value_set=pa.array(value, pa.string()))
+            if isinstance(value, list)
+            else pc.equal(table[col], value)
+        )
+        mask = hit if mask is None else pc.and_(mask, hit)
+    return mask
+
+
+def _naive_rows(table: pa.Table) -> list[Row]:
+    """Rows with naive-UTC datetimes, the shape `DataFrame.collect` gives
+    under the UTC session the package pins."""
+    naive = table.cast(
+        pa.schema(
+            f.with_type(pa.timestamp("us")) if pa.types.is_timestamp(f.type) else f
+            for f in table.schema
+        )
+    )
+    return [Row(**r) for r in naive.to_pylist()]
+
+
 class _VersionedTable:
     """A Parquet table stored as versioned subdirectories `v=N`; the
     current state is the highest N. Writes create N+1."""
 
-    def __init__(self, spark: SparkSession, path: str, schema: T.StructType):
+    def __init__(self, path: str, schema: T.StructType):
         # version discovery/GC walks the local filesystem (os.listdir /
-        # shutil) while reads/writes go through Spark — a remote path would
-        # list nothing and then collide on v=0. Fail loudly instead.
+        # shutil) and reads/writes are local pyarrow files — a remote path
+        # would list nothing and then collide on v=0. Fail loudly instead.
         if re.match(r"^[a-z][a-z0-9+.-]*://", path) and not path.startswith(
             "file://"
         ):
@@ -91,9 +137,8 @@ class _VersionedTable:
                 "(e.g. Delta MERGE INTO) instead of the versioned-directory "
                 "ledger"
             )
-        self.spark = spark
         self.path = path[len("file://"):] if path.startswith("file://") else path
-        self.schema = schema
+        self.schema = _arrow_schema(schema)
 
     @contextmanager
     def locked(self):
@@ -136,7 +181,7 @@ class _VersionedTable:
                 # exactly the IF NOT EXISTS semantics, so ignore the loss
                 # (real failures propagate out of _publish; verify the
                 # IF-NOT-EXISTS outcome all the same)
-                staged = self._stage(self.spark.createDataFrame([], self.schema))
+                staged = self._stage(self.schema.empty_table())
                 if not self._publish(staged, 0) and not self.exists():
                     raise RuntimeError(
                         f"ledger migrate lost the v=0 race at {self.path!r}"
@@ -148,13 +193,16 @@ class _VersionedTable:
 
         shutil.rmtree(self.path, ignore_errors=True)
 
-    def read(self) -> DataFrame:
+    def read(self) -> pa.Table:
         return self._read_version((self._versions() or [-1])[-1])
 
-    def _read_version(self, v: int) -> DataFrame:
+    def _read_version(self, v: int) -> pa.Table:
         if v < 0:
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.schema(self.schema).parquet(f"{self.path}/v={v}")
+            return self.schema.empty_table()
+        # Spark-written versions order columns by its join output and
+        # store INT96 (naive ns): select by name, cast to the UTC schema
+        table = pq.read_table(f"{self.path}/v={v}")
+        return table.select(self.schema.names).cast(self.schema)
 
     # ------------------------------------------------- CAS commit protocol
     #
@@ -182,18 +230,20 @@ class _VersionedTable:
 
     _CAS_MAX_RETRIES = 16
 
-    def _stage(self, df: DataFrame) -> str:
+    def _stage(self, table: pa.Table) -> str:
         import shutil
         import uuid
 
         staged = os.path.join(self.path, f".staged-{uuid.uuid4().hex}")
         try:
+            os.makedirs(staged)
             # ledger is metadata-sized: one file keeps listing cheap
-            df.coalesce(1).write.mode("errorifexists").parquet(staged)
-        except Exception:
-            # a failed/aborted write (expired pinned snapshot, executor
-            # death) must not abandon a half-written .staged-* orphan on
-            # the shared ledger path
+            pq.write_table(
+                table.cast(self.schema), os.path.join(staged, "part-0.parquet")
+            )
+        except BaseException:
+            # a failed/interrupted write must not abandon a half-written
+            # .staged-* orphan on the shared ledger path
             shutil.rmtree(staged, ignore_errors=True)
             raise
         return staged
@@ -233,17 +283,19 @@ class _VersionedTable:
         indicates a livelock bug, not load."""
         for _ in range(self._CAS_MAX_RETRIES):
             base = (self._versions() or [-1])[-1]
-            merged = merge_fn(self._read_version(base))
-            if merged is None:  # merge_fn declared the cycle a no-op
-                return
             try:
+                merged = merge_fn(self._read_version(base))
+                if merged is None:  # merge_fn declared the cycle a no-op
+                    return
                 staged = self._stage(merged)
             except Exception as e:  # noqa: BLE001
-                # the pinned v=base snapshot can be GC'd mid-merge when
-                # enough other writers commit between pin and stage (the
-                # Delta/Iceberg "expired snapshot" shape) — that is a
-                # lost race, not an error; anything else propagates
-                if "PATH_NOT_FOUND" in str(e) or "FileNotFound" in str(e):
+                # the pinned v=base snapshot can be GC'd between pin and
+                # read when enough other writers commit (the Delta/Iceberg
+                # "expired snapshot" shape) — that is a lost race, not an
+                # error; anything else propagates. A local read raises
+                # FileNotFoundError; a Spark/Hadoop filesystem layer (a
+                # remote _stage/_publish override) reports PATH_NOT_FOUND
+                if isinstance(e, FileNotFoundError) or "PATH_NOT_FOUND" in str(e):
                     continue
                 raise
             if self._publish(staged, base + 1):
@@ -278,7 +330,7 @@ class _VersionedTable:
             except OSError:
                 pass  # raced with its owner's publish/cleanup
 
-    def upsert(self, new: DataFrame, key: list[str]) -> None:
+    def upsert(self, new: pa.Table, key: list[str]) -> None:
         """Merge-on-key: drop old rows whose key appears in `new`, union
         the new rows (reference Runs.scala:93-102 ON DUPLICATE KEY UPDATE).
         Safe under concurrency twice over: the flock fast path serializes
@@ -287,36 +339,56 @@ class _VersionedTable:
         writer merges onto the first's committed version instead of losing
         its rows (RunsTest.scala upsert semantics under concurrency; CAS
         path exercised lock-disabled in tests/test_ledger.py)."""
+        keys = new.select(key)
         with self.locked():
             self._read_merge_commit(
-                lambda old: old.join(
-                    new.select(*key).distinct(), key, "left_anti"
-                ).unionByName(new)
+                lambda old: pa.concat_tables(
+                    [old.join(keys, key, join_type="left anti").cast(self.schema), new]
+                )
             )
 
-    def delete_where(self, cond) -> int:
+    def update_where(self, where: dict, col: str, value: datetime) -> None:
+        """Set `col` to `value` on the rows matching `where`; no version is
+        written when none match."""
+
+        def merge(cur: pa.Table) -> Optional[pa.Table]:
+            hit = _match(cur, where)
+            if not pc.any(hit).as_py():
+                return None
+            fill = pa.scalar(value, cur.schema.field(col).type)
+            return cur.set_column(
+                cur.schema.get_field_index(col),
+                cur.schema.field(col),
+                pc.if_else(hit, fill, cur[col]),
+            )
+
+        with self.locked():
+            self._read_merge_commit(merge)
+
+    def delete_where(self, where: dict) -> int:
         deleted = 0
         with self.locked():
 
-            def merge(old: DataFrame) -> Optional[DataFrame]:
+            def merge(old: pa.Table) -> Optional[pa.Table]:
                 nonlocal deleted
-                deleted = old.filter(cond).count()
+                hit = _match(old, where)
+                deleted = pc.sum(hit).as_py() or 0
                 # nothing matched on this snapshot: no version churn
-                return old.filter(~cond) if deleted else None
+                return old.filter(pc.invert(hit)) if deleted else None
 
             self._read_merge_commit(merge)
             return deleted
 
 
-class RunsLedger:
-    """The `runs` table: provenance of (input, version) -> output per
-    (project, method, stage). Unique key: (project, method, stage, input,
-    output) — reference runs.sql:11."""
+class _Ledger:
+    """One ledger table scoped to (project, method): the surface the runs
+    and runstatus tables share."""
 
-    KEY = ["project", "method", "stage", "input", "output"]
+    SCHEMA: T.StructType
+    KEY: list[str]
 
     def __init__(self, spark: SparkSession, path: str, project: str, method: str):
-        self.table = _VersionedTable(spark, path, RUNS_SCHEMA)
+        self.table = _VersionedTable(path, self.SCHEMA)
         self.spark = spark
         self.project = project
         self.method = method
@@ -328,7 +400,41 @@ class RunsLedger:
         self.table.drop()
 
     def all(self) -> list:
-        return self.table.read().collect()
+        return _naive_rows(self.table.read())
+
+    def _scope(self, stage: str, **where) -> dict:
+        return {"project": self.project, "method": self.method, "stage": stage, **where}
+
+    def _stage_rows(self, stage: str) -> pa.Table:
+        table = self.table.read()
+        return table.filter(_match(table, self._scope(stage)))
+
+    def of(self, stage: str) -> DataFrame:
+        """All ledger rows for this (project, method, stage)
+        (reference Runs.scala:106-116)."""
+        table = self._stage_rows(stage)
+        rows = list(zip(*(c.to_pylist() for c in table.columns)))
+        return self.spark.createDataFrame(rows, self.SCHEMA)
+
+    def delete(self, stage: str, output: str) -> int:
+        return self.table.delete_where(self._scope(stage, output=output))
+
+    def _upsert(self, rows: list[tuple]) -> None:
+        if rows:
+            new = pa.Table.from_pylist(
+                [dict(zip(self.table.schema.names, r)) for r in rows],
+                schema=self.table.schema,
+            )
+            self.table.upsert(new, self.KEY)
+
+
+class RunsLedger(_Ledger):
+    """The `runs` table: provenance of (input, version) -> output per
+    (project, method, stage). Unique key: (project, method, stage, input,
+    output) — reference runs.sql:11."""
+
+    SCHEMA = RUNS_SCHEMA
+    KEY = ["project", "method", "stage", "input", "output"]
 
     def insert(
         self,
@@ -349,57 +455,32 @@ class RunsLedger:
     ) -> None:
         """Batched upsert covering every output of a run in ONE versioned
         write — a run with k outputs would otherwise pay k full-table
-        rewrites (each a Spark job) for pure metadata."""
+        rewrites for pure metadata."""
         ts = now or utc_now()
-        rows = [
-            (self.project, self.method, stage, i.key, i.version, output, ts)
-            for output in sorted(outputs_map)
-            for i in sorted(outputs_map[output], key=lambda x: x.key)
-        ]
-        if not rows:
-            return
-        new = self.spark.createDataFrame(rows, RUNS_SCHEMA)
-        self.table.upsert(new, self.KEY)
-
-    def of(self, stage: str) -> DataFrame:
-        """All ledger rows for this (project, method, stage)
-        (reference Runs.scala:106-116)."""
-        return self.table.read().filter(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
+        self._upsert(
+            [
+                (self.project, self.method, stage, i.key, i.version, output, ts)
+                for output in sorted(outputs_map)
+                for i in sorted(outputs_map[output], key=lambda x: x.key)
+            ]
         )
 
-    def delete(self, stage: str, output: str) -> int:
-        return self.table.delete_where(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-            & (F.col("output") == output)
-        )
+    def committed(self, stage: str) -> dict[tuple[str, str], datetime]:
+        """{(output, input): processed timestamp, naive UTC} for this
+        stage — the ledger side of Stage.get_work's freshness check."""
+        table = self._stage_rows(stage)
+        pairs = zip(table["output"].to_pylist(), table["input"].to_pylist())
+        done = table["timestamp"].cast(pa.timestamp("us")).to_pylist()
+        return dict(zip(pairs, done))
 
 
-class RunStatusLedger:
+class RunStatusLedger(_Ledger):
     """The `runstatus` table: per-output lifecycle. Unique key: (project,
     method, stage, output) — reference runstatus.sql:11. Re-insert of an
     existing key RESETS started/ended (RunStatus.scala:79-83)."""
 
+    SCHEMA = RUNSTATUS_SCHEMA
     KEY = ["project", "method", "stage", "output"]
-
-    def __init__(self, spark: SparkSession, path: str, project: str, method: str):
-        self.table = _VersionedTable(spark, path, RUNSTATUS_SCHEMA)
-        self.spark = spark
-        self.project = project
-        self.method = method
-
-    def migrate(self) -> None:
-        self.table.migrate()
-
-    def drop(self) -> None:
-        self.table.drop()
-
-    def all(self) -> list:
-        return self.table.read().collect()
 
     def insert(self, stage: str, output: str, now: Optional[datetime] = None) -> None:
         self.insert_many(stage, [output], now)
@@ -411,32 +492,15 @@ class RunStatusLedger:
         of a run; re-inserted keys still reset started/ended to NULL
         (RunStatus.scala:79-83)."""
         ts = now or utc_now()
-        rows = [
-            (self.project, self.method, stage, o, None, None, ts)
-            for o in sorted(outputs)
-        ]
-        if not rows:
-            return
-        new = self.spark.createDataFrame(rows, RUNSTATUS_SCHEMA)
-        self.table.upsert(new, self.KEY)
+        self._upsert(
+            [(self.project, self.method, stage, o, None, None, ts) for o in sorted(outputs)]
+        )
 
     def _set_many(
         self, stage: str, outputs: list[str], col: str, ts: datetime
     ) -> None:
-        if not outputs:
-            return
-        k = (
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-            & (F.col("output").isin(list(outputs)))
-        )
-        with self.table.locked():
-            self.table._read_merge_commit(
-                lambda cur: cur.withColumn(
-                    col, F.when(k, F.lit(ts)).otherwise(F.col(col))
-                )
-            )
+        if outputs:
+            self.table.update_where(self._scope(stage, output=list(outputs)), col, ts)
 
     def start(self, stage: str, output: str, now: Optional[datetime] = None) -> None:
         self._set_many(stage, [output], "started", now or utc_now())
@@ -453,18 +517,3 @@ class RunStatusLedger:
         self, stage: str, outputs: list[str], now: Optional[datetime] = None
     ) -> None:
         self._set_many(stage, list(outputs), "ended", now or utc_now())
-
-    def of(self, stage: str) -> DataFrame:
-        return self.table.read().filter(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-        )
-
-    def delete(self, stage: str, output: str) -> int:
-        return self.table.delete_where(
-            (F.col("project") == self.project)
-            & (F.col("method") == self.method)
-            & (F.col("stage") == stage)
-            & (F.col("output") == output)
-        )

@@ -6,9 +6,10 @@ routing), and `make(output)` (the job). Running a stage:
 1. discovers inputs (lister under each source's common prefix),
 2. builds the output map — rules, inversion, grouping, ALL-propagation,
    missed-input validation, only/exclude filtering (Stage.scala:168-216),
-3. computes the DELTA of work as a left-anti join against the runs ledger
-   with a STRICT freshness inequality (ledger.timestamp > input.version —
-   Stage.scala:249-266; the anti-join runs in Spark),
+3. computes the DELTA of work: a candidate (output, input) pair is work
+   unless the runs ledger's timestamp for it is STRICTLY after the input
+   version (Stage.scala:249-266). The anti-join is a driver-side dict
+   lookup in the ledger's `committed(stage)` map, with no Spark job,
 4. executes jobs in-process with bounded parallelism (ThreadPoolExecutor,
    the reference's maxParallel cluster cap — Stage.scala:157), and
 5. commits provenance (insertRuns + RunStatus lifecycle — Stage.scala:270).
@@ -24,8 +25,6 @@ import logging
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable, Optional
-
-from pyspark.sql import functions as F
 
 from .context import Context
 from .inputs import Input, Source
@@ -168,37 +167,20 @@ class Stage:
         if opts.reprocess or not output_map:
             return {o: s for o, s in output_map.items() if s}
 
-        # THE incremental core: anti-join candidate (output, input, version)
-        # rows against the ledger on (output, input) where the ledger
-        # timestamp is STRICTLY after the input version (Stage.scala:256).
-        # The same input may appear under multiple outputs — the key is the
-        # pair, never the input alone.
-        spark = self.context.spark
-        cand = spark.createDataFrame(
-            [
-                (o, i.key, i.version)
-                for o, inputs_ in output_map.items()
-                for i in inputs_
-            ],
-            "output string, input string, version timestamp",
-        )
-        runs = self.context.runs.of(self.name).select(
-            F.col("output").alias("r_output"),
-            F.col("input").alias("r_input"),
-            F.col("timestamp").alias("r_timestamp"),
-        )
-        fresh = cand.join(
-            runs,
-            (cand.output == runs.r_output)
-            & (cand.input == runs.r_input)
-            & (runs.r_timestamp > cand.version),
-            "left_anti",
-        )
+        # THE incremental core: a candidate (output, input) pair is work
+        # unless the ledger holds it with a timestamp STRICTLY after the
+        # input version (Stage.scala:256). The same input may appear under
+        # multiple outputs — the key is the pair, never the input alone.
+        committed = self.context.runs.committed(self.name)
 
-        by_key = {(o, i.key): i for o, s in output_map.items() for i in s}
+        def fresh(o: str, i: Input) -> bool:
+            done = committed.get((o, i.key))
+            return done is None or done <= i.version
+
         out: OutputMap = {}
-        for row in fresh.collect():
-            out.setdefault(row.output, set()).add(by_key[(row.output, row.input)])
+        for o, inputs_ in output_map.items():
+            if work := {i for i in inputs_ if fresh(o, i)}:
+                out[o] = work
         return out
 
     # -- execution (Stage.scala:110-162, 270-318) ------------------------

@@ -502,6 +502,11 @@ class JdbcRunsLedger:
             & (F.col("stage") == stage)
         )
 
+    def committed(self, stage: str) -> dict:
+        """{(output, input): processed timestamp} for this stage — the
+        ledger side of Stage.get_work's freshness check."""
+        return {(r.output, r.input): r.timestamp for r in self.of(stage).collect()}
+
     def delete(self, stage: str, output: str) -> int:
         # parameterless DELETE via one statement; Derby needs literal
         # escaping — identifiers here come from test/driver code, not

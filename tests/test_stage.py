@@ -5,15 +5,9 @@ only/exclude filtering, --insert-runs / --no-insert-runs modes."""
 
 from __future__ import annotations
 
-
-# integration-style tier: excluded from the default fast gate run
-# (pytest.ini); the full suite runs with -m "slow or not slow"
-import pytest
-
-pytestmark = pytest.mark.slow
-
 from datetime import datetime, timedelta
 
+import pytest
 
 from dig_aggregator_core_spark.plans.context import Context
 from dig_aggregator_core_spark.plans.inputs import Input, Source
@@ -31,6 +25,8 @@ def inp(name: str, offset_s: int = 0) -> Input:
 
 # the TestMethod.scala fixture: route by first captured path segment
 class TestStage(Stage):
+    __test__ = False  # a fixture stage, not a pytest test class
+
     source_a = Source("a/*/", "*")
     source_b = Source("b/*/", "*")
     sources: list[Source] = []
