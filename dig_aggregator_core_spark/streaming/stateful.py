@@ -76,38 +76,51 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-# state-partition counts by operator family — the two pull in opposite
-# directions and a single value cannot serve both (the r7 benchdiff
-# caught the 4-everywhere pin making the Python folds 1.45x SLOWER while
-# it made the JVM joins 3x faster):
+# State-partition caps by operator family. The one rule: a stream runs on
+# min(cap, defaultParallelism) state partitions (_run_to_memory). Past the
+# task slots every partition is one more task wave, and a wave is a
+# per-task constant (state-store commit, Python worker stream) in both
+# families; under the slots the two families pull in opposite directions,
+# so each keeps its own cap (the r7 benchdiff caught the 4-everywhere pin
+# making the Python folds 1.45x SLOWER while it made the JVM joins 3x
+# faster — at 32 cores):
 # - JVM stateful ops (stream-stream joins, window aggs, dedup): the
 #   micro-batch constant is per-partition state-store commit (delta file
 #   + fsync per store instance per batch; an outer join carries 4 store
 #   instances per partition) — fewer partitions win. Measured on the
-#   right-outer join at sf0.1: 16 ≈ 4.3–5.6 s, 8 ≈ 2.7 s, 4 ≈ 2.0 s.
+#   right-outer join at sf0.1, 32 cores: 16 ≈ 4.3–5.6 s, 8 ≈ 2.7 s,
+#   4 ≈ 2.0 s. On 4 cores, stream_dedup_watermark (warm): 16 = 2.4–3.2 s,
+#   4 = 1.5 s at sf0.01; 16 = 2.3–2.4 s, 4 = 1.2–1.8 s at sf0.1.
 # - applyInPandasWithState folds: each partition is ONE Arrow-batched
 #   Python worker stream, so partitions = fold parallelism; the commit
-#   constant is smaller than the Python time it serializes.
-#   Measured over 5 fold twins at sf0.1 (min-of-2 each): 4 parts =
-#   15.9 s, 8 = 11.6 s, 16 = 10.2 s, 32 = 13.0 s — 16 is the knee;
-#   32 re-enters commit-constant territory.
-# At real scale both knobs size to state volume, not data volume.
+#   constant is smaller than the Python time it serializes. Measured
+#   over 5 fold twins at sf0.1, 32 cores (min-of-2 each): 4 parts =
+#   15.9 s, 8 = 11.6 s, 16 = 10.2 s, 32 = 13.0 s — 16 is the knee; 32
+#   re-enters commit-constant territory. On 4 cores 16 parts is 4 waves;
+#   warm, 16 vs 4 parts, sf0.01 | sf0.1: stream_stateful_user_stats
+#   3.0–4.2 vs 1.3–1.6 s | 5.0–5.2 vs 3.0 s; stream_ewma_stateful
+#   2.6–3.0 vs 1.3 s | 4.7 vs 3.0–3.1 s; stream_transition_matrix
+#   3.1–3.3 vs 1.5–1.7 s | 5.1 vs 3.4–3.6 s.
+# Hosts with 16 or more slots run exactly the 32-core plans above. At
+# real scale both caps size to state volume, not data volume.
 _JOIN_STATE_PARTS = 4
 _FOLD_STATE_PARTS = 16
 
 
-# Drained-result handoff bound (VERDICT r11 task 2). The memory sink is
-# ALWAYS dropped (the r11 OOM fix: sink tables pinned every output row
-# on the driver heap for the session, and 12 ops x 3 scales of the x100
-# campaign killed a 16g driver) — but the unconditional localCheckpoint
-# that replaced it re-materialized even tiny drained results through a
-# Spark job, a measured 1.9x on stream_interval_coalesce (1.21->2.30 s
-# at sf0.1). A drained result at or under BOTH bounds is handed back as
-# driver-local rows instead (LocalTableScan — zero extra jobs, and the
-# rows were transiently on the driver heap in the sink anyway); anything
-# bigger becomes the spillable localCheckpoint exactly as before. The
-# common case — bounded windowed aggregates — is far under the bounds,
-# so per-query retention stays in the repo's gated-collect size class.
+# Drained-result handoff bound (VERDICT r11 task 2). The memory sink's
+# view is ALWAYS dropped (the r11 OOM fix: sink tables pinned every
+# output row on the driver heap for the session, and 12 ops x 3 scales
+# of the x100 campaign killed a 16g driver) — but the unconditional
+# localCheckpoint that replaced it re-materialized even tiny drained
+# results through a Spark job, a measured 1.9x on
+# stream_interval_coalesce (1.21->2.30 s at sf0.1). A drained result at
+# or under BOTH bounds is handed back as the sink's own DataFrame: its
+# plan scans the sink's rows in the JVM (LocalTableScan — no job to
+# build it, no Python worker to run it), and the rows live exactly as
+# long as the caller holds the DataFrame. Anything bigger becomes the
+# spillable localCheckpoint exactly as before. The common case — bounded
+# windowed aggregates — is far under the bounds, so per-query retention
+# stays in the repo's gated-collect size class.
 _DRAIN_LOCAL_MAX_ROWS = 8192
 _DRAIN_LOCAL_MAX_BYTES = 4 << 20
 # test-observable drain telemetry: which leg the last drain took
@@ -141,10 +154,9 @@ def _drain_sink(
 ) -> DataFrame:
     # decide BEFORE moving rows: the row count comes free from query
     # progress (count() fallback), and the byte check is a 256-row
-    # sample over the sink's LocalTableScan. Only a result passing both
-    # bounds is collected. An earlier draft probed with
-    # limit(bound+1).collect(), which shipped bound-many rows just to
-    # discard them on the big path — ~0.4 s of waste per big drain.
+    # sample over the sink's LocalTableScan. An earlier draft probed
+    # with limit(bound+1).collect(), which shipped bound-many rows just
+    # to discard them on the big path — ~0.4 s of waste per big drain.
     tbl = spark.table(sink)
     n = rowcount if rowcount is not None else tbl.count()
     small = n <= _DRAIN_LOCAL_MAX_ROWS
@@ -155,7 +167,8 @@ def _drain_sink(
         est = sum(len(repr(r)) for r in sample) * n // len(sample)
         small = est <= _DRAIN_LOCAL_MAX_BYTES
     if small:
-        out = spark.createDataFrame(tbl.collect(), tbl.schema)
+        # the analyzed plan keeps the sink's rows after the view is gone
+        out = tbl
         _DRAIN_STATS["local"] += 1
     else:
         out = tbl.localCheckpoint()
@@ -170,11 +183,11 @@ def _run_to_memory(
     sink = f"stateful_sink_{next(_sink_counter)}"
     spark = df.sparkSession
     # The first micro-batch pins state-store partitioning into the
-    # checkpoint, so choose it deliberately (rationale above): state for
-    # this fixture is tiny and 200 partitions would be pure per-partition
-    # overhead.
+    # checkpoint, so choose it deliberately: the family cap, never more
+    # than the task slots (rationale above).
+    parts = min(state_partitions, spark.sparkContext.defaultParallelism)
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
         q = (
             df.writeStream.format("memory")

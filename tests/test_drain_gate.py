@@ -1,12 +1,13 @@
 """Size-gated drained-result handoff (VERDICT r11 task 2).
 
-The memory sink is always dropped (the r11 driver-OOM fix), but the
-unconditional localCheckpoint that replaced it cost a measured 1.9x on
-queries whose drained result is tiny. _drain_sink now hands results at
-or under the row AND byte bounds back as driver-local rows
-(LocalTableScan, zero extra jobs) and checkpoints only above them.
-Either leg must produce identical rows; which leg fired is asserted
-via _DRAIN_STATS, not inferred.
+The memory sink's view is always dropped (the r11 driver-OOM fix), but
+the unconditional localCheckpoint that replaced it cost a measured 1.9x
+on queries whose drained result is tiny. _drain_sink now hands results
+at or under the row AND byte bounds back as the sink's own DataFrame,
+whose plan scans the sink's rows in the JVM (LocalTableScan: no job to
+build it, no Python-RDD scan to run it), and checkpoints only above
+them. Either leg must produce identical rows; which leg fired is
+asserted via _DRAIN_STATS, not inferred.
 """
 from __future__ import annotations
 
@@ -25,9 +26,14 @@ def test_small_drain_stays_local(spark, sf_dir):
     got = stream_dedup_watermark(spark, sf_dir)
     assert stateful._DRAIN_STATS["local"] == before["local"] + 1
     assert stateful._DRAIN_STATS["checkpoint"] == before["checkpoint"]
-    # driver-local handoff: nothing pinned in the block manager (the
-    # checkpoint leg would persist RDD blocks)
+    # in-JVM handoff: nothing pinned in the block manager (the
+    # checkpoint leg would persist RDD blocks), and the plan is a local
+    # scan of the sink's rows — not a Python-RDD scan, which starts
+    # Python workers every time the result runs
     assert got.storageLevel.useMemory is False
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
     assert len(_rows(got)) > 0
 
 
