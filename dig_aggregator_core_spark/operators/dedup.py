@@ -328,59 +328,65 @@ _BANDS_CACHE: dict = {}
 
 
 def _bands_with_bound(spark: SparkSession, sf_dir: str):
-    key = (spark, sf_dir, dir_fingerprint(sf_dir))
-    hit = _BANDS_CACHE.get(key)
-    if hit is None:
-        from ..tables import evict_memo
+    from ..tables import _MEMO_LOCK, evict_memo
 
-        evict_memo(_BANDS_CACHE, spark, sf_dir,
-                   unpersist=lambda hit: hit[0].unpersist())
-        sh = _shingled(spark, sf_dir)
-        mh = sh.select(
-            "doc_id",
-            *[
-                F.array_min(
-                    F.expr(f"transform(sh_set, s -> md5(concat('{i}|', s)))")
-                ).alias(f"h{i}")
-                for i in range(_N_HASH)
-            ],
-        )
-        bands = mh.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat(
-                                F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")
-                            ).alias("band_key"),
-                        )
-                        for b in range(_N_BANDS)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.band_key").persist()
-        # The bound sums C(occ, 2) in DOUBLE: the LONG product
-        # count*(count-1) wraps negative past ~3e9 members in one bucket
-        # — exactly the hot-bucket regime the gate guards — and a wrapped
-        # bound would read small and FORCE the O(n^2) broadcast the gate
-        # exists to prevent (ADVICE r7). Double never wraps; above 2^53
-        # it is approximate-but-huge, which the <= gate compare reads
-        # correctly as "too big".
-        bound = (
-            bands.groupBy("band", "band_key")
-            .count()
-            .agg(
-                F.sum(
-                    F.col("count").cast("double") * (F.col("count") - 1) / 2
-                ).alias("pairs")
+    key = (spark, sf_dir, dir_fingerprint(sf_dir))
+    # lookup, derive and insert under the one memo lock: evict_memo
+    # iterates this dict, so an unlocked insert races it
+    with _MEMO_LOCK:
+        hit = _BANDS_CACHE.get(key)
+        if hit is None:
+            evict_memo(_BANDS_CACHE, spark, sf_dir,
+                       unpersist=lambda hit: hit[0].unpersist())
+            hit = _BANDS_CACHE[key] = _derive_bands(spark, sf_dir)
+        return hit
+
+
+def _derive_bands(spark: SparkSession, sf_dir: str):
+    sh = _shingled(spark, sf_dir)
+    mh = sh.select(
+        "doc_id",
+        *[
+            F.array_min(
+                F.expr(f"transform(sh_set, s -> md5(concat('{i}|', s)))")
+            ).alias(f"h{i}")
+            for i in range(_N_HASH)
+        ],
+    )
+    bands = mh.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.concat(
+                            F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")
+                        ).alias("band_key"),
+                    )
+                    for b in range(_N_BANDS)
+                ]
             )
-            .first()["pairs"]
+        ).alias("bb"),
+    ).select("doc_id", "bb.band", "bb.band_key").persist()
+    # The bound sums C(occ, 2) in DOUBLE: the LONG product
+    # count*(count-1) wraps negative past ~3e9 members in one bucket
+    # — exactly the hot-bucket regime the gate guards — and a wrapped
+    # bound would read small and FORCE the O(n^2) broadcast the gate
+    # exists to prevent (ADVICE r7). Double never wraps; above 2^53
+    # it is approximate-but-huge, which the <= gate compare reads
+    # correctly as "too big".
+    bound = (
+        bands.groupBy("band", "band_key")
+        .count()
+        .agg(
+            F.sum(
+                F.col("count").cast("double") * (F.col("count") - 1) / 2
+            ).alias("pairs")
         )
-        hit = (bands, int(bound or 0))
-        _BANDS_CACHE[key] = hit
-    return hit
+        .first()["pairs"]
+    )
+    return bands, int(bound or 0)
 
 
 def _minhash_verify_join(

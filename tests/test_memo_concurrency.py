@@ -11,19 +11,33 @@ across alternating corpus dirs (so evict_memo actually runs) and pins:
 2. every thread resolves the SAME plan object for the same key (the
    memo stays coherent under contention).
 
+The same tripwire covers a non-``load`` memo, dedup's _BANDS_CACHE
+(_bands_with_bound), whose derive runs a Spark job.
+
 The race was timing-dependent, so this cannot prove absence — it is
 the regression tripwire for someone removing the lock.
 """
 
 from __future__ import annotations
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 
 from dig_aggregator_core_spark import tables
+from dig_aggregator_core_spark.operators import dedup
+
+
+def _other_fixture(sf_dir: str) -> str:
+    """A second corpus dir, so lookups alternate between two dirs."""
+    for a, b in (("sf0.001", "sf0.01"), ("sf0.01", "sf0.001")):
+        other = sf_dir.replace(a, b)
+        if other != sf_dir and os.path.isdir(other):
+            return other
+    return sf_dir
 
 
 def test_concurrent_cold_loads_stay_coherent(spark, sf_dir):
-    other = sf_dir.replace("sf0.01", "sf0.001")
+    other = _other_fixture(sf_dir)
     dirs = [sf_dir, other] * 3
     names = ["orders", "lineitem", "customer", "documents"]
 
@@ -57,3 +71,19 @@ def test_concurrent_cold_loads_stay_coherent(spark, sf_dir):
             check[(d, n)] = id(tables.load(spark, d, n))
     again = {(d, n): id(tables.load(spark, d, n)) for d in dirs for n in names}
     assert check == again
+    assert final == {k: {v} for k, v in check.items()}
+
+
+def test_concurrent_cold_bands_stay_coherent(spark, sf_dir):
+    # cold start: every thread misses and races lookup+derive+insert
+    with tables._MEMO_LOCK:
+        dedup._BANDS_CACHE.clear()
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        hits = list(
+            pool.map(
+                lambda _i: dedup._bands_with_bound(spark, sf_dir), range(8)
+            )
+        )
+    # one derive: every thread got the single memoized (bands, bound)
+    assert len({id(h) for h in hits}) == 1
+    assert hits[0] is dedup._bands_with_bound(spark, sf_dir)
